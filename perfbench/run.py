@@ -9,7 +9,7 @@ and scale under `.bench_work/inputs/`) and its DuckDB oracle, outside any
 timed region. The program then runs on local[<affinity cores>] in this one
 client process, one job at a time (a closed loop with one client):
 
-- `--trace 0` starts Spark (the cold start, then three in-JVM restarts),
+- `--trace 0` starts Spark (the cold start, then five in-JVM restarts),
   runs one warm-up job and then jobs back to back for `--seconds`, checking
   each against the oracle. It prints the end-to-end metrics.
 - `--trace 1` runs the warm-up job, restarts Spark with an uncompressed event
@@ -40,7 +40,8 @@ import traceback
 HERE = os.path.dirname(os.path.abspath(__file__))
 ROOT = os.path.dirname(HERE)
 WORK = os.path.join(ROOT, ".bench_work")
-WARM_RESTARTS = 3
+WARM_RESTARTS = 5
+DRIVER_MEM = "2g"
 
 EVENT_LOG_CONF = {
     "spark.eventLog.enabled": "true",
@@ -84,7 +85,9 @@ def _prepare_env() -> None:
     shutil.rmtree(tmp, ignore_errors=True)  # what earlier runs left behind
     os.makedirs(tmp)
     os.environ["SPARK_GRAFT_CPUS"] = str(len(os.sched_getaffinity(0)))
-    os.environ.setdefault("SPARK_GRAFT_DRIVER_MEM", "2g")
+    # a fixed heap, not the program's 24g default, which is more memory than
+    # a 15 GB host has; assigned, so the caller's environment cannot move it
+    os.environ["SPARK_GRAFT_DRIVER_MEM"] = DRIVER_MEM
     os.environ["TMPDIR"] = tmp
     os.environ["SPARK_LOCAL_DIRS"] = tmp
     opts = os.environ.get("JAVA_TOOL_OPTIONS", "")
@@ -322,6 +325,8 @@ def run_traced(runner: Runner) -> dict:
         "session.first_job_s": first_s,
     }
     if untraced:
+        # prefix differences telescope, so Σ self over the path equals
+        # traced_wall: coverage is 1 + overhead_s / the reference's wall
         metrics["trace.coverage"] = sum(self_s[k] for k in path) / untraced["wall_s"]
         metrics["trace.overhead_s"] = traced_wall - untraced["wall_s"]
     return {"metrics": metrics, "host_timed": host, "spans": tracer.to_json()}
@@ -337,7 +342,7 @@ def main(argv: list[str] | None = None) -> int:
         declared = json.load(f)["per_layer" if args.trace else "end_to_end"]
 
     sf_dir, info = prepare_input(args.workload, args.seed, args.scale)
-    host = procs.host_context(ROOT)
+    host = {**procs.host_context(ROOT), "driver_mem": DRIVER_MEM}
     runner = Runner(args.workload, args.seed, sf_dir, info)
     if args.trace:
         out = run_traced(runner)

@@ -8,7 +8,10 @@ The profile times each layer by prefix differencing: the cumulative prefixes
 derive, +parse, +enrich, +route are each forced by a `noop` write, and a
 layer's self time is its prefix's (shortest) time minus the previous one's. The
 write, checkpoint and metrics layers are alternatives on top of the route
-prefix, so their self time is their wall time minus the route prefix's.
+prefix, so their self time is their wall time minus the route prefix's; the
+metrics and write spans run as often as the prefixes and count their
+shortest time too. The aggregate span, which reads back what the last write
+wrote, and the checkpoint's crash and resume run once.
 """
 
 from __future__ import annotations
@@ -22,7 +25,8 @@ from dataclasses import asdict, dataclass
 
 from workloads import CRASH_AFTER, CRASH_MESSAGE, run_pipeline_main
 
-# the cheap prefixes run this many times; their shortest time is used
+# the prefixes, metrics and write run this many times; their shortest time
+# counts. A third round would add ~17 s to a run that must end within 180 s.
 PREFIX_ROUNDS = 2
 
 
@@ -95,10 +99,10 @@ def warm_python_workers(spark) -> None:
 
 
 def profile(workload: str, spark, sf_dir: str, work_dir: str, tracer: Tracer) -> dict:
-    """Run every layer under its own span (the noop prefixes PREFIX_ROUNDS
-    times, the rest once); returns what the layers
-    report: observe() lineage, written files, aggregates and the resumed
-    checkpoint's result.
+    """Run every layer under its own span (the noop prefixes, metrics and
+    write PREFIX_ROUNDS times, aggregate and the checkpoint's spans once);
+    returns what the layers report: observe() lineage, written files,
+    aggregates and the resumed checkpoint's result.
 
     The write and aggregate spans are backfill's path (`fan_out`, then
     aggregates of the written sinks); the checkpoint spans are skewed_job's
@@ -121,6 +125,7 @@ def profile(workload: str, spark, sf_dir: str, work_dir: str, tracer: Tracer) ->
     from beats_spark.routing import fan_out
 
     counts: dict = {}
+    sinks_dir = os.path.join(work_dir, "fan_out")
     for _ in range(PREFIX_ROUNDS):
         with tracer.span("derive"):
             _noop(load_transcripts(spark, sf_dir))
@@ -131,22 +136,22 @@ def profile(workload: str, spark, sf_dir: str, work_dir: str, tracer: Tracer) ->
         with tracer.span("route"):
             _noop(full_pipeline(spark, sf_dir))
 
-    # the observe() lineage jobs/run_pipeline.py attaches, on the same prefix
-    with tracer.span("metrics"):
-        m = PipelineMetrics()
-        t = m.observe(load_transcripts(spark, sf_dir), "scan")
-        parsed = with_standard_metrics(m, parse_stage(t), "parse")
-        enriched = m.observe(enrich_stage(parsed), "enrich")
-        routed = m.observe(
-            route_stage(enriched), "route",
-            deadletter=F.sum(F.when(F.col("_sink") == "deadletter", 1).otherwise(0)),
-        )
-        _noop(routed)
-        counts["lineage"] = m.report()
+        # the observe() lineage jobs/run_pipeline.py attaches, on the same prefix
+        with tracer.span("metrics"):
+            m = PipelineMetrics()
+            t = m.observe(load_transcripts(spark, sf_dir), "scan")
+            parsed = with_standard_metrics(m, parse_stage(t), "parse")
+            enriched = m.observe(enrich_stage(parsed), "enrich")
+            routed = m.observe(
+                route_stage(enriched), "route",
+                deadletter=F.sum(F.when(F.col("_sink") == "deadletter", 1).otherwise(0)),
+            )
+            _noop(routed)
+            counts["lineage"] = m.report()
 
-    sinks_dir = os.path.join(work_dir, "fan_out")
-    with tracer.span("write"):
-        fan_out(full_pipeline(spark, sf_dir), sinks_dir)
+        with tracer.span("write"):
+            fan_out(full_pipeline(spark, sf_dir), sinks_dir)
+
     part_files = [
         os.path.join(d, f)
         for d, _, files in os.walk(sinks_dir)
