@@ -10,8 +10,9 @@ timed region. The program then runs on local[<affinity cores>] in this one
 client process, one job at a time (a closed loop with one client):
 
 - `--trace 0` starts Spark (the cold start, then five in-JVM restarts),
-  runs one warm-up job and then jobs back to back for `--seconds`, checking
-  each against the oracle. It prints the end-to-end metrics.
+  runs one warm-up job and then jobs back to back for `--seconds` and at
+  least MIN_TIMED_PASSES pipeline passes, checking each against the oracle.
+  It prints the end-to-end metrics.
 - `--trace 1` runs the warm-up job, restarts Spark with an uncompressed event
   log and runs every layer under its own span (see spans.py), then restarts
   without the log and runs two untraced jobs, the second one the reference
@@ -20,8 +21,9 @@ client process, one job at a time (a closed loop with one client):
 Stdout ends with one JSON line {"correct", "attempted", "failed", "metrics"}
 holding the metrics BENCHMARK.json declares for the mode. The line before it
 is the full record: host context, input properties, every job, every metric
-(also `fail_ratio` and, on skewed_job, `resume_s`) and, traced, the spans.
-The record is also written under `.bench_work/records/`.
+with its unit (also `turns_per_s`, `fail_ratio` and, on skewed_job,
+`resume_s`) and, traced, the spans. The record is also written under
+`.bench_work/records/`.
 """
 
 from __future__ import annotations
@@ -41,7 +43,16 @@ HERE = os.path.dirname(os.path.abspath(__file__))
 ROOT = os.path.dirname(HERE)
 WORK = os.path.join(ROOT, ".bench_work")
 WARM_RESTARTS = 5
+# pipeline passes timed at least, however long --seconds is: how many jobs
+# fit into --seconds depends on the host's load, and a job's CPU time falls
+# with each pass as the JIT warms up, so a fixed count keeps runs comparable
+MIN_TIMED_PASSES = 2
 DRIVER_MEM = "2g"
+# units of the metrics only the record carries; BENCHMARK.json has the rest
+RECORD_UNITS = {
+    "turns_per_s": "turns/s", "setup_wall_s": "s", "session.cold_start_s": "s",
+    "fail_ratio": "ratio", "timed_jobs": "count", "resume_s": "s",
+}
 
 EVENT_LOG_CONF = {
     "spark.eventLog.enabled": "true",
@@ -202,20 +213,24 @@ class Runner:
 
 def run_e2e(runner: Runner, seconds: float) -> dict:
     import procs
+    import workloads
     from bench import _cpu_delta_pct, _cpu_stat
 
     spark, get_s, first_s = _start()
-    setups = []
+    setups, setups_cpu = [], []
     for _ in range(WARM_RESTARTS):
         spark.stop()
+        cpu0 = procs.tree_cpu_s()
         spark, g, f = _start()
         setups.append(g + f)
+        setups_cpu.append(procs.tree_cpu_s() - cpu0)
     runner.job(spark, "warmup")
     timed = []
+    min_jobs = -(-MIN_TIMED_PASSES // workloads.passes_per_job(runner.workload))
     cpu_before = _cpu_stat()
     with procs.PeakRss() as rss:
         t0 = time.perf_counter()
-        while time.perf_counter() - t0 < seconds:
+        while time.perf_counter() - t0 < seconds or len(timed) < min_jobs:
             timing = runner.job(spark, f"job{len(timed)}")
             timed.append(timing)
     host = _cpu_delta_pct(cpu_before, _cpu_stat())
@@ -224,7 +239,8 @@ def run_e2e(runner: Runner, seconds: float) -> dict:
     ok = [t for t in timed if t]
     turns = runner.info["shape"]["turns"]
     metrics = {
-        "setup_s": statistics.median(setups),
+        "setup_s": statistics.median(setups_cpu),
+        "setup_wall_s": statistics.median(setups),
         "session.cold_start_s": get_s + first_s,
         "peak_rss_mb": rss.peak_mb,
         "fail_ratio": runner.failed / runner.attempted,
@@ -339,7 +355,10 @@ def main(argv: list[str] | None = None) -> int:
     import procs
 
     with open(os.path.join(ROOT, "BENCHMARK.json")) as f:
-        declared = json.load(f)["per_layer" if args.trace else "end_to_end"]
+        spec = json.load(f)
+    declared = spec["per_layer" if args.trace else "end_to_end"]
+    units = {m["name"]: m["unit"] for m in spec["end_to_end"] + spec["per_layer"]}
+    units.update(RECORD_UNITS)
 
     sf_dir, info = prepare_input(args.workload, args.seed, args.scale)
     host = {**procs.host_context(ROOT), "driver_mem": DRIVER_MEM}
@@ -355,7 +374,8 @@ def main(argv: list[str] | None = None) -> int:
     record = {
         "workload": args.workload, "seed": args.seed, "scale": args.scale,
         "trace": args.trace, "seconds": args.seconds, "input": info["shape"],
-        "host": host, "jobs": runner.jobs, "metrics": metrics, **out,
+        "host": host, "jobs": runner.jobs, "metrics": metrics,
+        "units": {k: units[k] for k in metrics}, **out,
     }
     os.makedirs(os.path.join(WORK, "records"), exist_ok=True)
     name = f"{args.workload}-s{args.seed}-t{args.trace}-{int(time.time())}.json"

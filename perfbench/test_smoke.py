@@ -50,7 +50,9 @@ def test_workload_prints_every_metric(workload, trace):
         assert isinstance(got["value"], (int, float))
     record = json.loads(lines[-2])["record"]
     assert record["input"]["turns"] > 0
+    assert set(record["units"]) == set(record["metrics"])
     if not trace:
+        assert record["units"]["turns_per_s"] == "turns/s"
         assert record["metrics"]["fail_ratio"] == 0
         assert ("resume_s" in record["metrics"]) == (workload == "skewed_job")
 

@@ -69,6 +69,12 @@ def resumed_job(spark, sf_dir: str, out_dir: str, job_id: str) -> tuple[dict, di
     return result, {"wall_s": t2 - t0, "resume_s": t2 - t1}
 
 
+def passes_per_job(workload: str) -> int:
+    """Pipeline passes in one job: a skewed_job job is the crashed run and the
+    resumed one."""
+    return 2 if workload == "skewed_job" else 1
+
+
 def run_job(workload: str, spark, sf_dir: str, out_dir: str, job_id: str):
     if workload == "skewed_job":
         return resumed_job(spark, sf_dir, out_dir, job_id)
