@@ -4,13 +4,14 @@ This is the Spark restatement of the Beats data path (SURVEY.md §3.1):
 scan → processor program (ordered column transforms) → routing selector →
 per-sink fan-out + aggregates. Program order is preserved as column
 dependency order; Catalyst fuses the whole parse+enrich stage into one
-WholeStageCodegen span around a single Arrow UDF exchange.
+WholeStageCodegen span around a single Arrow UDF exchange. The aggregate
+layer is one mid-grain groupBy at (*keys, conv_id) that the per-sink
+counts and the conversation rollups both re-aggregate.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import Window as W
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from beats_spark.data.lookups import role_lookup_df, tool_lookup_df
@@ -71,82 +72,61 @@ def full_pipeline(spark: SparkSession, sf_dir: str, replicate: int = 1) -> DataF
     )
 
 
-def sink_aggregates(routed: DataFrame) -> DataFrame:
-    """Per-sink per-role aggregate counts — the per-sink turn/tool-call counts
-    from the north rule (≅ pipeline monitoring counters,
-    publisher/pipeline/monitoring.go:24-179).
-
-    Exact-distinct via the mid-grain two-stage shape (same plan as
-    combined_aggregates): aggregate once at (_sink, role, conv_id), then
-    count mid-grain rows per (_sink, role). No Expand node — the
-    countDistinct rewrite's expand measured 1.5× slower at 16 cores, and
-    test_plans.py asserts its absence."""
-    mid = routed.groupBy("_sink", "role", "conv_id").agg(
-        F.count("*").alias("_tc"),
-        F.sum(
-            F.when(
-                F.col("tool").isNotNull() & (F.col("tool") != "") & (F.col("tool") != "none"),
-                1,
-            ).otherwise(0)
-        ).alias("_tcc"),
-    )
-    return mid.groupBy("_sink", "role").agg(
-        F.sum("_tc").alias("turn_count"),
-        F.sum("_tcc").alias("tool_call_count"),
-        F.count("*").alias("n_convs"),
-    )
+def is_tool_call() -> Column:
+    """The tool-call predicate: the turn names a tool (its SQL twin is
+    queries._TOOL_CALL_SQL). Never null, so `.cast("long")` counts it."""
+    tool = F.col("tool")
+    return tool.isNotNull() & (tool != "") & (tool != "none")
 
 
-def combined_aggregates(written: DataFrame) -> tuple[DataFrame, DataFrame]:
-    """Per-sink aggregates AND conversation rollups from ONE scan: the big
-    input is aggregated once at the mid-grain (_sink, role, conv_id), and
-    both outputs re-aggregate that tiny intermediate. count(DISTINCT
-    conv_id) becomes a plain count over mid-grain rows — exact, with no
-    distinct-expand (a GROUPING SETS + countDistinct variant measured 1.5×
-    slower at 16 cores from the expand blowup). The mid-grain intermediate
-    (~|sinks|×|roles|×|convs| rows — tiny next to the input) is persisted
-    so the two branch aggregations run one input scan between them; callers
-    running repeatedly should clearCache()/unpersist when done."""
-    mid = written.groupBy("_sink", "role", "conv_id").agg(
+def _mid_grain(df: DataFrame, *keys: str) -> DataFrame:
+    """The one scan of the aggregate layer: one row per (*keys, conv_id)
+    with its turn count, tool-call count and first/last ts. Every output
+    re-aggregates it, so count(DISTINCT conv_id) becomes a plain count of
+    mid-grain rows — exact, with no distinct-Expand (that rewrite measured
+    1.5× slower at 16 cores; test_plans.py asserts its absence)."""
+    return df.groupBy(*keys, "conv_id").agg(
         F.count("*").alias("turn_count"),
-        F.sum(
-            F.when(
-                F.col("tool").isNotNull() & (F.col("tool") != "") & (F.col("tool") != "none"),
-                1,
-            ).otherwise(0)
-        ).alias("tool_call_count"),
+        F.sum(is_tool_call().cast("long")).alias("tool_call_count"),
         F.min("ts").alias("first_ts"),
         F.max("ts").alias("last_ts"),
-    ).persist()
-    sink_aggs = mid.groupBy("_sink", "role").agg(
+    )
+
+
+def _per_sink(mid: DataFrame) -> DataFrame:
+    return mid.groupBy("_sink", "role").agg(
         F.sum("turn_count").alias("turn_count"),
         F.sum("tool_call_count").alias("tool_call_count"),
         F.count("*").alias("n_convs"),
     )
-    rollups = mid.groupBy("conv_id").agg(
+
+
+def _per_conv(mid: DataFrame) -> DataFrame:
+    return mid.groupBy("conv_id").agg(
         F.sum("turn_count").alias("n_turns"),
         F.min("first_ts").alias("first_ts"),
         F.max("last_ts").alias("last_ts"),
         F.sum("tool_call_count").alias("total_tool_calls"),
     )
-    return sink_aggs, rollups
+
+
+def sink_aggregates(routed: DataFrame) -> DataFrame:
+    """Per-sink per-role turn count, tool-call count and conversation count
+    (≅ pipeline monitoring counters, publisher/pipeline/monitoring.go:24-179)."""
+    return _per_sink(_mid_grain(routed, "_sink", "role"))
 
 
 def conv_rollups(df: DataFrame) -> DataFrame:
-    """Conversation-level rollups via window over (conv_id, turn_idx)."""
-    w = W.partitionBy("conv_id").orderBy("turn_idx")
-    cum = df.withColumn(
-        "cum_tool_calls",
-        F.sum(
-            F.when(
-                F.col("tool").isNotNull() & (F.col("tool") != "") & (F.col("tool") != "none"),
-                1,
-            ).otherwise(0)
-        ).over(w.rowsBetween(W.unboundedPreceding, 0)),
-    )
-    return cum.groupBy("conv_id").agg(
-        F.count("*").alias("n_turns"),
-        F.min("ts").alias("first_ts"),
-        F.max("ts").alias("last_ts"),
-        F.max("cum_tool_calls").alias("total_tool_calls"),
-    )
+    """Per-conversation turn count, first/last ts and tool-call total. Every
+    output is order-free, so no window and no sort (test_plans.py gates
+    both): a hot conversation does not serialise into one sorted task."""
+    return _per_conv(_mid_grain(df))
+
+
+def combined_aggregates(written: DataFrame) -> tuple[DataFrame, DataFrame]:
+    """sink_aggregates AND conv_rollups from ONE scan of `written`: the
+    mid-grain at (_sink, role, conv_id) — ~|sinks|×|roles|×|convs| rows,
+    small next to the input — is persisted and both outputs re-aggregate
+    it. Callers running repeatedly should clearCache() when done."""
+    mid = _mid_grain(written, "_sink", "role").persist()
+    return _per_sink(mid), _per_conv(mid)

@@ -42,6 +42,7 @@ from beats_spark.pipeline import (
     TRANSCRIPT_PATTERNS,
     conv_rollups,
     full_pipeline,
+    is_tool_call,
     parse_stage,
     sink_aggregates,
 )
@@ -102,16 +103,11 @@ def _sink_case_sql() -> str:
     )
 
 
+# 0/1 per turn: the SQL twin of pipeline.is_tool_call
 _TOOL_CALL_SQL = (
     "CASE WHEN tool IS NOT NULL AND tool <> '' AND tool <> 'none' "
     "THEN 1 ELSE 0 END"
 )
-
-
-def _tool_call_col():
-    return F.when(
-        F.col("tool").isNotNull() & (F.col("tool") != "") & (F.col("tool") != "none"), 1
-    ).otherwise(0)
 
 
 # --------------------------------------------------------------------------
@@ -199,22 +195,6 @@ def q_grok_parse(spark, sf_dir):
 # --------------------------------------------------------------------------
 
 
-def q_route_counts(spark, sf_dir):
-    # UNREGISTERED since round 4 (registry consolidation, VERDICT r3 item
-    # 1): per-sink counts are strictly subsumed by routed_rows' full
-    # row-equality oracle + sink_aggregates' per-(sink,role) counts. Kept
-    # as a function because test_plans pins its no-Expand mid-grain shape
-    # ((sink, conv_id) two-stage agg — see pipeline.sink_aggregates).
-    routed = full_pipeline(spark, sf_dir)
-    mid = routed.groupBy(F.col("_sink").alias("sink"), "conv_id").agg(
-        F.count("*").alias("_n")
-    )
-    return mid.groupBy("sink").agg(
-        F.sum("_n").alias("n_rows"),
-        F.count("*").alias("n_convs"),
-    )
-
-
 @register(
     "sink_aggregates",
     oracle_cte()
@@ -231,7 +211,7 @@ def q_sink_aggregates(spark, sf_dir):
 
 
 # --------------------------------------------------------------------------
-# 4. conversation rollups (window over conv_id ordered by turn_idx)
+# 4. conversation rollups (per-conv turn/tool-call totals and ts range)
 # --------------------------------------------------------------------------
 
 
@@ -441,7 +421,7 @@ def q_flows_window(spark, sf_dir):
     t = load_transcripts(spark, sf_dir)
     mid = t.groupBy(F.window("ts", "1 hour").alias("w"), "role", "conv_id").agg(
         F.count("*").alias("_n"),
-        F.sum(_tool_call_col()).alias("_tcc"),
+        F.sum(is_tool_call().cast("long")).alias("_tcc"),
         F.sum(F.length("text")).alias("_sb"),
         F.max(F.length("text")).alias("_mb"),
     )
@@ -1499,7 +1479,7 @@ def q_topk_convs(spark, sf_dir):
     return (
         t.groupBy("conv_id")
         .agg(
-            F.sum(_tool_call_col()).alias("tool_calls"),
+            F.sum(is_tool_call().cast("long")).alias("tool_calls"),
             F.count("*").alias("n_turns"),
         )
         .orderBy(F.col("tool_calls").desc(), "conv_id")
@@ -3331,13 +3311,9 @@ def q_tool_transitions(spark, sf_dir):
     and a tiny groupBy rolls up the matrix. Oracle mirrors the filter +
     lag + rollup in DuckDB."""
     t = load_transcripts(spark, sf_dir)
-    tool_ok = (
-        F.col("tool").isNotNull() & (F.col("tool") != "")
-        & (F.col("tool") != "none")
-    )
     w = W.partitionBy("conv_id").orderBy("turn_idx")
     chain = (
-        t.where(tool_ok)
+        t.where(is_tool_call())
         .select("conv_id", "turn_idx", "tool")
         .withColumn("prev_tool", F.lag("tool").over(w))
         .where(F.col("prev_tool").isNotNull())
@@ -3394,7 +3370,7 @@ def q_conv_quality(spark, sf_dir):
         F.sum(changed).alias("n_role_changes"),
         F.countDistinct("role").alias("n_roles"),
         F.sum("_tok").alias("total_tokens"),
-        F.sum(_tool_call_col()).alias("n_tool_calls"),
+        F.sum(is_tool_call().cast("long")).alias("n_tool_calls"),
     )
     return per_conv.withColumn(
         "keep",

@@ -158,10 +158,6 @@ def fan_out(
     )
 
 
-def sink_names(df: DataFrame, target: str = SINK_COL) -> list[str]:
-    return [r[0] for r in df.select(target).distinct().collect()]
-
-
 def iceberg_available(spark) -> bool:
     """True when an Iceberg Spark runtime is on the JVM classpath.
 

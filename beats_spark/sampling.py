@@ -13,6 +13,8 @@ Everything is pure Column expressions — map-only, no shuffle, no UDF.
 
 from __future__ import annotations
 
+import math
+
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
@@ -666,6 +668,8 @@ def _split_thresholds(weights: dict[str, float]) -> list[tuple[str, str]]:
     arithmetic — the last split's threshold is forced to the space top so
     the partition is total regardless of float weight normalization."""
     names = list(weights)
+    if not all(math.isfinite(w) and w >= 0 for w in weights.values()):
+        raise ValueError("hash_split weights must be finite and non-negative")
     total = float(sum(weights.values()))
     if total <= 0 or int(round(total * 10**9)) == 0:
         # the second clause rejects positive-but-sub-nano totals that

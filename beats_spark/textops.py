@@ -1610,7 +1610,9 @@ def strip_boilerplate_sql(
     min_docs: int = 10,
 ) -> str:
     """DuckDB twin on line STRINGS (independent of xxhash64): per-doc
-    md5 of the cleaned text plus removal counts."""
+    md5 of the cleaned text plus removal counts. Null text gives a null
+    md5, as Spark's null `cleaned` does; a doc whose every line is
+    boilerplate gives md5('') on both engines."""
     return f"""
 WITH base AS (
   SELECT {id_col} AS _id, string_split({text_col}, chr(10)) AS ls
@@ -1635,6 +1637,7 @@ rebuilt AS (
 )
 SELECT _id AS {id_col}, n_lines,
        n_lines - len(kept) AS n_removed,
-       md5(coalesce(array_to_string(kept, chr(10)), '')) AS cleaned_md5
+       CASE WHEN kept IS NOT NULL
+            THEN md5(coalesce(array_to_string(kept, chr(10)), '')) END AS cleaned_md5
 FROM rebuilt
 """.strip()

@@ -64,18 +64,32 @@ def test_broadcast_threshold_not_disabled(spark):
 def test_no_expand_in_distinct_aggregates(spark):
     # exact-distinct counts go through the mid-grain two-stage shape; the
     # countDistinct rewrite's Expand node (row-multiplying) must not return
-    from beats_spark.pipeline import sink_aggregates
-    from beats_spark.queries import QUERIES, q_route_counts
+    from beats_spark.pipeline import combined_aggregates, sink_aggregates
+    from beats_spark.queries import QUERIES
 
     routed = full_pipeline(spark, SF_SMOKE)
     for name, df in {
         "sink_aggregates": sink_aggregates(routed),
-        "route_counts": q_route_counts(spark, SF_SMOKE),
+        "combined_aggregates": combined_aggregates(routed)[0],
         "flows_window": QUERIES["flows_window"](spark, SF_SMOKE),
         "fingerprint": QUERIES["fingerprint"](spark, SF_SMOKE),
     }.items():
         nodes = _nodes(_formatted_plan(df))
         assert "Expand" not in nodes, f"{name} regressed to a distinct Expand"
+
+
+def test_conv_rollups_has_no_window_or_sort(spark):
+    # every rollup output ignores turn order, so the rollups are hash
+    # aggregates over conv_id. The input is a plain table: the transcript
+    # derivation has a window of its own.
+    from beats_spark.pipeline import conv_rollups
+
+    turns = spark.createDataFrame(
+        [("c1", 0, "2024-01-01 00:00:00", "grep"), ("c1", 1, "2024-01-01 00:01:00", None)],
+        "conv_id string, turn_idx int, ts string, tool string",
+    ).withColumn("ts", F.to_timestamp("ts"))
+    nodes = _nodes(_formatted_plan(conv_rollups(turns)))
+    assert "Window" not in nodes and "Sort" not in nodes, nodes
 
 
 def test_ivf_no_driver_collect(spark):

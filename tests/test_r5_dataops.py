@@ -306,22 +306,30 @@ class TestReviewedEdges:
     def test_fully_boilerplate_doc_matches_oracle_semantics(self, spark):
         """A doc whose EVERY line is boilerplate must clean to '' on both
         engines (DuckDB's array_to_string([]) is NULL — the SQL twin
-        coalesces it)."""
+        coalesces it), and a null-text doc gives nulls on both."""
         import duckdb
 
-        rows = [(i, "NAV\nFOOT") for i in range(12)]
+        rows = [(i, "NAV\nFOOT") for i in range(12)] + [(99, None)]
         df = spark.createDataFrame(rows, "doc_id long, text string")
-        got = X.strip_boilerplate(df, min_docs=10).where("doc_id = 0").first()
+        out = X.strip_boilerplate(df, min_docs=10)
+        got = out.where("doc_id = 0").first()
         assert got["cleaned"] == "" and got["n_removed"] == 2
+        null_doc = out.where("doc_id = 99").first()
+        assert (null_doc["n_lines"], null_doc["n_removed"], null_doc["cleaned"]) == (
+            None, None, None)
         con = duckdb.connect()
         con.execute(
             "CREATE VIEW t AS SELECT * FROM (VALUES "
             + ", ".join(f"({i}, 'NAV' || chr(10) || 'FOOT')" for i in range(12))
-            + ") v(doc_id, text)"
+            + ", (99, NULL)) v(doc_id, text)"
         )
         sql = X.strip_boilerplate_sql(table="t", min_docs=10)
         r = con.execute(f"SELECT cleaned_md5 FROM ({sql}) s WHERE doc_id = 0").fetchone()
         assert r[0] == hashlib.md5(b"").hexdigest()
+        r = con.execute(
+            f"SELECT n_lines, n_removed, cleaned_md5 FROM ({sql}) s WHERE doc_id = 99"
+        ).fetchone()
+        assert r == (None, None, None)
 
     def test_hash_split_single_split_sql_is_valid(self, spark):
         import duckdb
@@ -338,6 +346,13 @@ class TestReviewedEdges:
 
         with pytest.raises(ValueError):
             SM._split_thresholds({"a": 1e-12, "b": 1e-12})
+
+    def test_hash_split_negative_or_nonfinite_weight_rejected(self):
+        import pytest
+
+        for bad in (-1, float("nan"), float("inf"), float("-inf")):
+            with pytest.raises(ValueError, match="finite and non-negative"):
+                SM._split_thresholds({"a": bad, "b": 2})
 
     def test_bloom_m_bits_must_align_to_words(self, spark):
         import pytest
